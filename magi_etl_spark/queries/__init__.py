@@ -229,8 +229,12 @@ _PRIORITY: list[str] = [
     "q211_negative_edges",
     "q215_weighted_jaccard",
     "q233_exact_quantiles",
-    # Oldest-verified-first tail refresh (rule 1 fill, 15 remaining
-    # slots after the 24 optimization re-entries above; computed from
+    # Rule-2 re-entry: the result cache gained an in-process hot tier and
+    # an atomic single-flight lock (cache.py), which q77 routes through;
+    # it displaces the fill's last entry (q38_srp_lsh_buckets).
+    "q77_cached_metric_query",
+    # Oldest-verified-first tail refresh (rule 1 fill, 14 remaining
+    # slots after the 25 re-entries above; computed from
     # the union of CORRECTNESS rows at r14 close; ties in registration
     # order): the seven r9-era rows (q203 displaced from the r14 window
     # by the q245 rule-2 re-entry, then q220-q225), then the front of
@@ -254,7 +258,6 @@ _PRIORITY: list[str] = [
     "q35_vector_stats",
     "q36_rollup",
     "q37_pivot",
-    "q38_srp_lsh_buckets",
 ]
 
 
